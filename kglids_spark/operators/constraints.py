@@ -21,7 +21,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -675,30 +675,20 @@ def cap_violations(
     data — stable across runs, partitionings, and cluster sizes (the
     verdict-identity discipline), unlike LIMIT (planner-ordered) or a
     rand() sample. Two-phase distributed top-k so no reducer ever sees
-    a constraint's full violation stream: per-PARTITION prune to the
-    cap smallest hashes (mapInPandas, O(cap) memory), then one window
-    over the ≤ cap × n_partitions candidates — the window's per-group
-    input is bounded regardless of how skewed violations are across
-    constraints."""
-    schema = viols.schema
-    hashed = viols.withColumn("_vh", F.xxhash64(F.col(key), F.col("constraint_id")))
-
-    def prune(batches):
-        for pdf in batches:
-            yield (
-                pdf.sort_values("_vh", kind="stable")
-                .groupby("constraint_id", sort=False)
-                .head(cap)
-            )
-
-    pruned = hashed.mapInPandas(prune, hashed.schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("constraint_id").orderBy("_vh", key)
+    a constraint's full violation stream: Spark plans the row_number
+    filter as a per-partition WindowGroupLimit (keep the cap smallest
+    hashes, before the shuffle) and a final one over the ≤ cap ×
+    n_partitions candidates. The partial limit is planned for caps up
+    to ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by
+    default); a larger cap is still exact, with each constraint's
+    stream sorted in one (spilling) task."""
+    w = Window.partitionBy("constraint_id").orderBy(
+        F.xxhash64(F.col(key), F.col("constraint_id")), key
+    )
     return (
-        pruned.withColumn("_rn", F.row_number().over(w))
+        viols.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= cap)
-        .select(*[F.col(f.name) for f in schema.fields])
+        .drop("_rn")
     )
 
 

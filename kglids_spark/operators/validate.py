@@ -10,8 +10,9 @@ become transactional appends of mergeable sketch rows.
 Scale design (10^12 rows, 1000 executors):
 - ONE main scan per run computes, per logical bucket: row count, every
   row-level violation count, an HLL++ sketch of doc_id
-  (hll_sketch_agg — binary, mergeable), and an exact fixed-width
-  histogram of the drift column. All are algebraic aggregates with
+  (hll_sketch_agg — binary, mergeable), a KLL quantile sketch of the
+  drift column (kll_sketch_agg_double) and an exact fixed-width
+  histogram of it. All are algebraic aggregates with
   map-side partials; the shuffle moves only n_buckets tiny rows.
 - Uniqueness adds the one unavoidable key shuffle (groupBy doc_id),
   bucket-local because buckets hash the same key.
@@ -58,9 +59,17 @@ GLOBAL_BUCKET = -1  # verdict rows for table-level constraints
 # Above this bucket count the merged-sketch collect switches from the
 # single-action global aggregate to a two-level aggregation, so no
 # single task ever materializes all buckets (VERDICT r2 "What's wrong
-# #2"). At or below it, one final task holding n_buckets × ~5 KB sketch
-# rows (≤ ~5 MB at 1024) is cheaper than an extra job.
+# #2"). At or below it, one final task holding n_buckets small rows
+# plus one HLL and one KLL merge buffer is cheaper than an extra job.
 MERGE_COLLECT_MAX = 1024
+
+# Layout version of the mergeable sketch blobs in ledger rows, written
+# as a literal into every bucket_stats and violations row. Ledgers from
+# before Spark's built-in KLL stored numpy-format blobs that
+# kll_merge_agg_double rejects (KLL_INVALID_INPUT_SKETCH_BUFFER, which
+# aborts the job); those rows read back with NULL here, so their
+# buckets are re-validated and never merged.
+STATS_FORMAT = "spark-kll-1"
 
 
 @dataclass
@@ -87,12 +96,12 @@ def _stats_pass(
     the persisted (bucket, key, count>1) frame shared with violation
     extraction so the uniqueness shuffle runs exactly once.
 
-    ``kll_col``: also attach a mergeable KLL quantile sketch of that
-    column per bucket (north-star stats-collector mechanism:
-    groupBy(bucket).applyInPandas over Arrow batches — the one
-    statistic JVM aggregates can't express mergeably). Sketch bytes
-    ride the same bucket_stats row, so resume/merge semantics are
-    identical to the histogram and HLL sketches."""
+    ``kll_col``: also attach min/max and a mergeable KLL quantile
+    sketch (Spark's built-in ``kll_sketch_agg_double``, default k) of
+    that column per bucket, computed in the same aggregate as the HLL
+    sketch. Sketch bytes ride the same bucket_stats row, so
+    resume/merge semantics are identical to the histogram and HLL
+    sketches."""
     viol_sums = [
         F.sum(C.violation_expr(c, df_b).cast("long")).alias(f"v_{i}")
         for i, c in enumerate(row_cs)
@@ -117,6 +126,13 @@ def _stats_pass(
             F.sum(c * c).alias(f"_m_q_{m}"),
             F.min(c).alias(f"_m_lo_{m}"),
             F.max(c).alias(f"_m_hi_{m}"),
+        ]
+    if kll_col is not None:
+        v = F.col(kll_col).try_cast("double")
+        aggs += [
+            F.min(v).alias("v_min"),
+            F.max(v).alias("v_max"),
+            F.kll_sketch_agg_double(v).alias("kll"),
         ]
     stats = df_b.groupBy(BUCKET_COL).agg(*aggs)
 
@@ -150,19 +166,7 @@ def _stats_pass(
         ).drop(f"u_{uc.cid}")
     if drift_spec is None:
         stats = stats.withColumn("hist", F.lit(None).cast("array<long>"))
-    if kll_col is not None:
-        from kglids_spark.operators.arrow_stats import bucket_sketches_prebucketed
-
-        kll = bucket_sketches_prebucketed(
-            df_b.select(BUCKET_COL, kll_col), kll_col
-        ).select(
-            BUCKET_COL,
-            F.col("min_value").alias("v_min"),
-            F.col("max_value").alias("v_max"),
-            "kll",
-        )
-        stats = stats.join(kll, BUCKET_COL, "left")
-    else:
+    if kll_col is None:
         stats = (
             stats.withColumn("v_min", F.lit(None).cast("double"))
             .withColumn("v_max", F.lit(None).cast("double"))
@@ -179,6 +183,37 @@ def _dedupe_earliest(stats: DataFrame) -> DataFrame:
         Window.partitionBy("bucket_id").orderBy("completed_at", "run_id")
     )
     return stats.withColumn("_rn", w_first).filter(F.col("_rn") == 1).drop("_rn")
+
+
+def _suite_rows(
+    rows: DataFrame, chash: str, n_buckets: int, *, mergeable: bool = True
+) -> DataFrame:
+    """Ledger rows written under this constraint suite and bucketing.
+    ``mergeable`` also requires the current STATS_FORMAT: only such rows
+    mark a bucket completed or feed a sketch merge. Rows from a ledger
+    that predates the column (absent, or NULL under mergeSchema) fail
+    it. Histogram-only reads (the drift baseline) pass
+    ``mergeable=False`` so older ledgers keep serving as baselines."""
+    cond = (F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets)
+    if mergeable:
+        fmt = F.col("stats_format") if "stats_format" in rows.columns else F.lit(None)
+        cond &= fmt == STATS_FORMAT
+    return rows.filter(cond)
+
+
+def _merged_estimates(hll: str, kll: str) -> list:
+    """Aggregate expressions finishing the cross-bucket sketch merges:
+    the HLL distinct-key estimate and the KLL quartiles. Quantiles of an
+    empty merged KLL (the column all NULL or non-numeric) throw, so that
+    case reads NULL quartiles instead."""
+    m = F.kll_merge_agg_double(kll)
+    ranks = F.array(*[F.lit(q) for q in (0.25, 0.5, 0.75)])
+    return [
+        F.hll_sketch_estimate(F.hll_union_agg(hll)).alias("est"),
+        F.when(
+            F.kll_sketch_get_n_double(m) > 0, F.kll_sketch_get_quantile_double(m, ranks)
+        ).alias("quartiles"),
+    ]
 
 
 def _slim_projection(
@@ -364,9 +399,7 @@ def _validate_impl(
     # ---- resume: skip completed buckets -------------------------------
     completed: set[int] = set()
     if ledger is not None and ledger.exists("bucket_stats"):
-        prior = ledger.read("bucket_stats").filter(
-            (F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets)
-        )
+        prior = _suite_rows(ledger.read("bucket_stats"), chash, n_buckets)
         completed = {r.bucket_id for r in prior.select("bucket_id").distinct().collect()}
     remaining_df = df_b
     if completed:
@@ -408,58 +441,56 @@ def _validate_impl(
         .withColumn("constraint_hash", F.lit(chash))
         .withColumn("n_buckets", F.lit(n_buckets))
         .withColumn("completed_at", F.lit(time.time()))
+        .withColumn("stats_format", F.lit(STATS_FORMAT))
     )
 
     stats_snapshot = None
     if ledger is not None:
         stats_snapshot = ledger.append("bucket_stats", new_stats)
-        all_stats = ledger.read("bucket_stats").filter(
-            (F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets)
-        )
+        all_stats = _suite_rows(ledger.read("bucket_stats"), chash, n_buckets)
     else:
         all_stats = new_stats
 
     # ---- idempotent merge: earliest run wins per bucket ----------------
-    # ONE action returns both the per-bucket sketch rows and the
-    # cross-bucket HLL union estimate (collect_list + hll_union_agg in
-    # the same aggregate): a separate estimate job would re-run the
-    # whole input scan (or force a persist) and add ~1s of fixed
-    # per-pass job overhead that the N-vs-4N efficiency pays at 4N.
+    # ONE action returns the per-bucket rows and the cross-bucket sketch
+    # merges (collect_list + hll_union_agg + kll_merge_agg_double in the
+    # same aggregate): a separate estimate job would re-run the whole
+    # input scan (or force a persist) and add ~1s of fixed per-pass job
+    # overhead that the N-vs-4N efficiency pays at 4N. The sketch blobs
+    # stay out of the collected rows; only their merged estimates reach
+    # the driver.
     # Past MERGE_COLLECT_MAX buckets the global collect_list would
-    # funnel every sketch row through ONE final task (a straggler at
+    # funnel every row through ONE final task (a straggler at
     # 10^4-10^5 buckets on a real cluster), so the merge tiers: level 1
     # groups ~sqrt(n_buckets) buckets per task (collect_list + partial
-    # HLL union), the driver assembles the G small groups, and a tiny
-    # local-list job finishes the HLL union over G sketches.
+    # HLL/KLL merges), the driver assembles the G small groups, and a
+    # tiny local-list job finishes both merges over G sketches.
     merged = _dedupe_earliest(all_stats)
+    row_cols = [c for c in merged.columns if c not in ("hll_key", "kll")]
     if n_buckets <= MERGE_COLLECT_MAX:
         agg_row = merged.groupBy().agg(
-            F.collect_list(F.struct(*merged.columns)).alias("rows"),
-            F.hll_sketch_estimate(F.hll_union_agg("hll_key")).alias("est"),
+            F.collect_list(F.struct(*row_cols)).alias("rows"),
+            *_merged_estimates("hll_key", "kll"),
         ).collect()[0]
         merged_rows = list(agg_row.rows)
-        est = int(agg_row.est) if agg_row.est is not None else 0
     else:
         n_groups = max(int(math.isqrt(n_buckets)), 1)
         lvl1 = (
             merged.groupBy(F.pmod(F.col("bucket_id"), F.lit(n_groups)).alias("_g"))
             .agg(
-                F.collect_list(F.struct(*merged.columns)).alias("rows"),
-                F.hll_union_agg("hll_key").alias("hll_group"),
+                F.collect_list(F.struct(*row_cols)).alias("rows"),
+                F.hll_union_agg("hll_key").alias("hll"),
+                F.kll_merge_agg_double("kll").alias("kll"),
             )
             .collect()
         )
         merged_rows = [r for grp in lvl1 for r in grp.rows]
-        group_sketches = [
-            (bytes(grp.hll_group),) for grp in lvl1 if grp.hll_group is not None
-        ]
-        est = 0
-        if group_sketches:
-            est_df = spark.createDataFrame(group_sketches, "hll binary")
-            est_val = est_df.agg(
-                F.hll_sketch_estimate(F.hll_union_agg("hll"))
-            ).collect()[0][0]
-            est = int(est_val) if est_val is not None else 0
+        agg_row = (
+            spark.createDataFrame([(g.hll, g.kll) for g in lvl1], "hll binary, kll binary")
+            .agg(*_merged_estimates("hll", "kll"))
+            .collect()[0]
+        )
+    est = int(agg_row.est) if agg_row.est is not None else 0
 
     # ---- baseline from a ledger snapshot (time travel) -----------------
     if baseline_hist is None and baseline_snapshot_id is not None:
@@ -472,8 +503,9 @@ def _validate_impl(
         # per-bucket histograms (colliding bucket_ids under different
         # bucketings) into the drift baseline
         prior = _dedupe_earliest(
-            src.read("bucket_stats", snapshot_id=baseline_snapshot_id).filter(
-                (F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets)
+            _suite_rows(
+                src.read("bucket_stats", snapshot_id=baseline_snapshot_id),
+                chash, n_buckets, mergeable=False,
             )
         )
         n_cells = drift_spec.n_cells if drift_spec is not None else None
@@ -525,19 +557,15 @@ def _validate_impl(
 
     sketch_metrics = {}
     if kll_col is not None and merged_rows:
-        from kglids_spark.operators.sketches import merge_serialized
-
-        blobs = [bytes(r.kll) for r in merged_rows if getattr(r, "kll", None) is not None]
-        if blobs:
-            q25, q50, q75 = merge_serialized(blobs).quantiles([0.25, 0.5, 0.75])
-            mins = [r.v_min for r in merged_rows if r.v_min is not None]
-            maxs = [r.v_max for r in merged_rows if r.v_max is not None]
-            sketch_metrics = {
-                f"{kll_col}_min": min(mins) if mins else None,
-                f"{kll_col}_max": max(maxs) if maxs else None,
-                f"{kll_col}_median_kll": q50,
-                f"{kll_col}_iqr_kll": (q75 - q25) if q25 is not None else None,
-            }
+        q25, q50, q75 = agg_row.quartiles or (None, None, None)
+        mins = [r.v_min for r in merged_rows if r.v_min is not None]
+        maxs = [r.v_max for r in merged_rows if r.v_max is not None]
+        sketch_metrics = {
+            f"{kll_col}_min": min(mins) if mins else None,
+            f"{kll_col}_max": max(maxs) if maxs else None,
+            f"{kll_col}_median_kll": q50,
+            f"{kll_col}_iqr_kll": (q75 - q25) if q25 is not None else None,
+        }
 
     metric_values: dict = {}
     if metric_cs:
@@ -709,12 +737,14 @@ def _validate_impl(
                 "violations",
                 viols_new.withColumn("constraint_hash", F.lit(chash))
                 .withColumn("n_buckets", F.lit(n_buckets))
-                .withColumn("run_id", F.lit(run_id)),
+                .withColumn("run_id", F.lit(run_id))
+                .withColumn("stats_format", F.lit(STATS_FORMAT)),
             )
-            viols = (
-                ledger.read("violations")
-                .filter((F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets))
-                .select(key, "constraint_id")
+            # same predicate as the completed-bucket set: buckets whose
+            # stats predate STATS_FORMAT were re-extracted by this run,
+            # so their older violation rows must not count twice
+            viols = _suite_rows(ledger.read("violations"), chash, n_buckets).select(
+                key, "constraint_id"
             )
             # re-cap the MERGED read: each resumed run appends its own
             # <= cap rows per constraint, so the union can exceed the

@@ -47,15 +47,38 @@ def scoped_sql_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+def _driver_mem() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, or when unset ``min(16g, MemTotal/2)``.
+
+    The GC profile pre-sizes the whole heap (-Xms), so a fixed 16g
+    default commits more than a small host has: a 16 GB host's test
+    JVM was OOM-killed at 13.8 GB. Half of physical memory leaves room
+    for Python and the OS; hosts without /proc/meminfo keep 16g."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mb = min(mb, int(line.split()[1]) // 1024 // 2)
+                    break
+    except OSError:
+        pass
+    return f"{mb}m"
+
+
 def _mem_mb() -> int:
-    """Parse SPARK_GRAFT_DRIVER_MEM as a JVM-style size string into MiB.
+    """Parse the driver memory (``_driver_mem``) as a JVM-style size
+    string into MiB.
 
     Unit-aware (``512m`` is 512 MiB, not 512 GiB): the -Xms/-Xmn GC
     flags derived from this must never exceed the -Xmx that Spark sets
     from the same string, or the JVM refuses to start. A bare number is
     MiB (Spark's default unit for memory confs); unparseable values
     fall back to 16g."""
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g").strip().lower()
+    mem = _driver_mem().strip().lower()
     m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", mem)
     if not m:
         return 16 * 1024
@@ -109,7 +132,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # GC profile for scan-heavy validation (measured on the 15 GB

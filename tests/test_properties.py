@@ -1,7 +1,6 @@
 """Property-based tests (hypothesis) for the pure-Python engine parts:
-KLL sketch rank accuracy and merge laws, bloom filter no-false-negatives,
-KS/PSI/JSD/EMD drift math, histogram merge, AST abstraction resolution,
-and the compliance boundary rule. Mostly driver-side (no SparkSession,
+bloom filter no-false-negatives, KS/PSI/JSD/EMD drift math, histogram
+merge, AST abstraction resolution, and the compliance boundary rule. Mostly driver-side (no SparkSession,
 fast shrinking); the round-5 information/truncation laws run tiny
 random corpora through the real operators against pure-Python
 references (session-scoped spark fixture).
@@ -15,60 +14,6 @@ from hypothesis import strategies as st
 from kglids_spark.operators.constraints import BloomFilter
 from kglids_spark.operators.drift import ks_statistic, merge_histograms, psi
 from kglids_spark.operators.pipelines import abstract_pipeline
-from kglids_spark.operators.sketches import KLL
-
-floats = st.floats(allow_nan=False, allow_infinity=False, width=32)
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(floats, min_size=1, max_size=4000))
-def test_kll_rank_error_bounded(values):
-    sk = KLL(k=256)
-    sk.update_batch(np.array(values, dtype=np.float64))
-    data = np.sort(np.array(values, dtype=np.float64))
-    n = len(data)
-    for q in (0.1, 0.5, 0.9):
-        est = sk.quantiles([q])[0]
-        # rank of the estimate must be within eps*n of the target rank
-        # (KLL guarantee; k=256 gives eps well under 0.05)
-        rank_lo = np.searchsorted(data, est, side="left")
-        rank_hi = np.searchsorted(data, est, side="right")
-        target = q * n
-        slack = max(0.05 * n, 1.0)
-        assert rank_lo - slack <= target <= rank_hi + slack
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.lists(floats, min_size=1, max_size=1000),
-    st.lists(floats, min_size=1, max_size=1000),
-)
-def test_kll_merge_commutes(a, b):
-    def build(vals):
-        s = KLL(k=256)
-        s.update_batch(np.array(vals, dtype=np.float64))
-        return s
-
-    ab = build(a).merge(build(b))
-    ba = build(b).merge(build(a))
-    data = np.sort(np.array(a + b, dtype=np.float64))
-    n = len(data)
-    for q in (0.25, 0.75):
-        for est in (ab.quantiles([q])[0], ba.quantiles([q])[0]):
-            rank_lo = np.searchsorted(data, est, side="left")
-            rank_hi = np.searchsorted(data, est, side="right")
-            slack = max(0.06 * n, 1.0)
-            assert rank_lo - slack <= q * n <= rank_hi + slack
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.lists(floats, min_size=1, max_size=500))
-def test_kll_serde_preserves_estimates(values):
-    sk = KLL(k=128)
-    sk.update_batch(np.array(values, dtype=np.float64))
-    rt = KLL.deserialize(sk.serialize())
-    assert sk.quantiles([0.1, 0.5, 0.9]) == rt.quantiles([0.1, 0.5, 0.9])
-
 
 @settings(max_examples=30, deadline=None)
 @given(st.sets(st.integers(min_value=-(2**62), max_value=2**62), max_size=500))

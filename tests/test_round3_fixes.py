@@ -57,6 +57,20 @@ def test_gc_opts_never_exceed_heap(monkeypatch):
     assert "-Xms256m" in opts and "-Xmn192m" in opts
 
 
+def test_default_heap_fits_host(monkeypatch):
+    """Unset SPARK_GRAFT_DRIVER_MEM sizes the heap to min(16g,
+    MemTotal/2), and -Xms/-Xmn follow the same value as -Xmx."""
+    from kglids_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    with open("/proc/meminfo") as f:
+        total_mb = next(int(x.split()[1]) for x in f if x.startswith("MemTotal:")) // 1024
+    want = min(16 * 1024, total_mb // 2)
+    assert session._driver_mem() == f"{want}m"
+    assert session._mem_mb() == want
+    assert f"-Xms{want}m" in session._gc_opts(session._mem_mb())
+
+
 # ---------------------------------------------------------------------------
 # with_bucket validation (ADVICE r2: never trust a foreign bucket_id)
 
@@ -118,7 +132,7 @@ def test_tablestore_roundtrips_bucket_count(spark, tokens_df, tmp_path):
 # tiered merge collect (VERDICT r2 "What's wrong #2")
 
 
-def test_tiered_merge_matches_single_level(spark, tokens_df, monkeypatch):
+def test_tiered_merge_matches_single_level(spark, tokens_df, monkeypatch, assert_kll_rank_bound):
     import kglids_spark.operators.validate as V
 
     suite = C.default_suite(SOURCES)
@@ -130,6 +144,8 @@ def test_tiered_merge_matches_single_level(spark, tokens_df, monkeypatch):
     )
     assert tiered.metrics["distinct_key_estimate"] == base.metrics["distinct_key_estimate"]
     assert tiered.metrics["rows_validated"] == base.metrics["rows_validated"]
+    # the KLL merge also tiers: quartiles present and within the rank bound
+    assert_kll_rank_bound(tiered.metrics)
 
 
 def test_merge_at_4096_buckets_bounded(spark):
